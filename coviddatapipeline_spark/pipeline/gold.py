@@ -42,26 +42,20 @@ def q3_browse(cases: DataFrame, limit: int = 2000) -> DataFrame:
 def q4_cases_by_county_topk_other(cases: DataFrame, k: int = 9) -> DataFrame:
     """Q4: donut — total cases per county, top-k + 'Other', pct-of-total.
 
-    Grand total via broadcast 1-row cross-join (an empty-frame window
-    would funnel the whole per-county set through one WindowExec
-    partition); the row_number window over the reduced set IS the
-    top-k semantics.
+    The row_number rank (which IS the top-k semantics) and the grand
+    total share one constant-key global window; its input is the
+    per-county aggregates (bounded by county cardinality), never the
+    fact table.
     """
     per_county = cases.groupBy("county").agg(F.sum("new_cases").alias("cases"))
-    total = per_county.agg(F.sum("cases").alias("total"))
-    ranked = per_county.crossJoin(F.broadcast(total)).select(
+    all_counties = W.partitionBy(const_key("county"))
+    ranked = per_county.select(
         "county",
         "cases",
-        # constant-key global window: input is per-county aggregates
-        # (bounded by county cardinality), never the fact table
         F.row_number()
-        .over(
-            W.partitionBy(const_key("county")).orderBy(
-                F.col("cases").desc(), F.col("county")
-            )
-        )
+        .over(all_counties.orderBy(F.col("cases").desc(), F.col("county")))
         .alias("rn"),
-        "total",
+        F.sum("cases").over(all_counties).alias("total"),
     )
     return (
         ranked.groupBy(

@@ -45,7 +45,8 @@ def save_watermark(path: str, value: str) -> None:
 
 
 def compute_watermark(df: DataFrame, date_col: str = "date") -> str | None:
-    """True max over the loaded increment (fixes A2's batch[-1] hazard)."""
+    """True max date of a loaded table (fixes A2's batch[-1] hazard);
+    rebuilds a lost checkpoint from Silver."""
     row = df.agg(F.max(date_col).alias("wm")).collect()[0]
     return None if row["wm"] is None else str(row["wm"])
 

@@ -10,9 +10,11 @@
 from __future__ import annotations
 
 import os
+import shutil
 
 import duckdb
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from coviddatapipeline_spark.operators.common import DUCKDB_INITCAP
 from coviddatapipeline_spark.pipeline import gold
@@ -20,7 +22,7 @@ from coviddatapipeline_spark.pipeline.bronze import ingest_csv_to_bronze, read_b
 from coviddatapipeline_spark.pipeline.etl import default_paths, run_incremental_etl
 from coviddatapipeline_spark.pipeline.silver import transform_covid
 from coviddatapipeline_spark.pipeline.watermark import load_watermark
-from tests.covid_fixture import make_rows, write_csv
+from tests.covid_fixture import COUNTIES, make_rows, write_csv
 from tests.parity import compare
 
 # DuckDB twin of the Silver transform, built from the same semantic
@@ -110,11 +112,13 @@ def test_gold_q3_browse(covid_env):
     assert ok, msg
 
 
-def test_gold_q4_topk_other(covid_env):
+@pytest.mark.parametrize("k", [3, len(COUNTIES)])
+def test_gold_q4_topk_other(covid_env, k):
+    q4 = gold.q4_cases_by_county_topk_other(covid_env["silver"], k=k)
     ok, msg = compare(
-        gold.q4_cases_by_county_topk_other(covid_env["silver"], k=3),
+        q4,
         covid_env["duck"],
-        """
+        f"""
         WITH per_county AS (
             SELECT county, sum(new_cases) AS cases FROM covid_cases GROUP BY county
         ), ranked AS (
@@ -123,13 +127,16 @@ def test_gold_q4_topk_other(covid_env):
                    sum(cases) OVER () AS total
             FROM per_county
         )
-        SELECT CASE WHEN rn <= 3 THEN county ELSE 'Other' END AS county,
+        SELECT CASE WHEN rn <= {k} THEN county ELSE 'Other' END AS county,
                CAST(sum(cases) AS BIGINT) AS cases,
                round(sum(cases) * 100.0 / max(total), 2) AS pct
         FROM ranked GROUP BY 1 ORDER BY cases DESC
         """,
     )
     assert ok, msg
+    # k covers every county: all of them rank in, no 'Other' row appears
+    if k >= len(COUNTIES):
+        assert "Other" not in {r["county"] for r in q4.collect()}
 
 
 def test_gold_q5_deaths_by_state(covid_env):
@@ -209,6 +216,78 @@ def test_etl_empty_input_no_crash(spark, tmp_path):
     r = run_incremental_etl(spark, paths["bronze"], paths["silver"], paths["checkpoint"])
     assert r.rows_loaded == 0
     assert r.watermark is None
+
+
+def _jobs_in_group(spark, group, fn):
+    """(fn(), number of Spark jobs fn ran), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _parquet_files(path):
+    return {f for f in os.listdir(path) if f.endswith(".parquet")}
+
+
+def test_pipeline_stages_are_single_actions(spark, tmp_path):
+    """Ingest is one job (the count is observed on the write); a non-first
+    ETL run is one action — the append, with its adaptive query stages
+    — with no count or watermark re-run of the extract and no schema
+    inference; a no-op re-run loads nothing, keeps the watermark and
+    appends at most one schema-only file."""
+    root = str(tmp_path)
+    paths = default_paths(root)
+
+    def etl():
+        return run_incremental_etl(spark, paths["bronze"], paths["silver"], paths["checkpoint"])
+
+    rows = make_rows(1000)
+    csv1, csv2 = os.path.join(root, "b1.csv"), os.path.join(root, "b2.csv")
+    write_csv(csv1, rows[:605])
+    write_csv(csv2, rows[605:])
+    ingest_csv_to_bronze(spark, csv1, paths["bronze"])
+    etl()
+
+    n, jobs = _jobs_in_group(
+        spark, "ingest", lambda: ingest_csv_to_bronze(spark, csv2, paths["bronze"], mode="append")
+    )
+    assert (n, jobs) == (395, 1)
+    r2, jobs = _jobs_in_group(spark, "etl", etl)
+    assert r2.rows_loaded > 0
+    assert jobs <= 5, f"non-first ETL run ran {jobs} jobs"
+
+    silver_rows = spark.read.parquet(paths["silver"]).count()
+    files = _parquet_files(paths["silver"])
+    r3 = etl()
+    assert r3.rows_loaded == 0
+    assert r3.watermark == r2.watermark == load_watermark(paths["checkpoint"])
+    assert len(_parquet_files(paths["silver"]) - files) <= 1
+    assert spark.read.parquet(paths["silver"]).count() == silver_rows
+
+
+def test_etl_failed_write_keeps_checkpoint(spark, tmp_path):
+    """The watermark checkpoint is saved only after the observed write
+    returns: a run whose Silver append fails raises and leaves it as it
+    was, so the next run retries the same increment."""
+    root = str(tmp_path)
+    paths = default_paths(root)
+    rows = make_rows(600)
+    csv1, csv2 = os.path.join(root, "b1.csv"), os.path.join(root, "b2.csv")
+    write_csv(csv1, rows[:300])
+    write_csv(csv2, rows[300:])
+    ingest_csv_to_bronze(spark, csv1, paths["bronze"])
+    r1 = run_incremental_etl(spark, paths["bronze"], paths["silver"], paths["checkpoint"])
+    ingest_csv_to_bronze(spark, csv2, paths["bronze"], mode="append")
+
+    shutil.rmtree(paths["silver"])
+    open(paths["silver"], "w").close()  # a regular file: no directory to append into
+    with pytest.raises(Py4JJavaError):
+        run_incremental_etl(spark, paths["bronze"], paths["silver"], paths["checkpoint"])
+    assert load_watermark(paths["checkpoint"]) == r1.watermark
 
 
 def test_silver_null_vs_missing_semantics(spark):
