@@ -45,9 +45,11 @@ def q4_cases_by_county_topk_other(cases: DataFrame, k: int = 9) -> DataFrame:
     The row_number rank (which IS the top-k semantics) and the grand
     total share one constant-key global window; its input is the
     per-county aggregates (bounded by county cardinality), never the
-    fact table.
+    fact table. Coalesced to one partition, that input already satisfies
+    the window, the bucket ``groupBy`` and the final ``orderBy``: no
+    exchange after the aggregate and no range-sampling job for the sort.
     """
-    per_county = cases.groupBy("county").agg(F.sum("new_cases").alias("cases"))
+    per_county = cases.groupBy("county").agg(F.sum("new_cases").alias("cases")).coalesce(1)
     all_counties = W.partitionBy(const_key("county"))
     ranked = per_county.select(
         "county",
@@ -70,9 +72,11 @@ def q4_cases_by_county_topk_other(cases: DataFrame, k: int = 9) -> DataFrame:
 
 
 def q5_deaths_by_state(cases: DataFrame) -> DataFrame:
-    """Q5: bar — total deaths per state, ascending."""
+    """Q5: bar — total deaths per state, ascending; the totals (bounded by
+    state cardinality) sort in one partition, without a sampling job."""
     return (
         cases.groupBy("state")
         .agg(F.sum("new_deaths").alias("deaths"))
+        .coalesce(1)
         .orderBy("deaths")
     )

@@ -11,13 +11,13 @@ not data — a single tiny document) but fixes the semantics:
 
 - the watermark is the TRUE max loaded date (not order-dependent
   ``batch[-1]``, /root/reference/dags/ETL.py:142);
-- extraction is ``>=`` the watermark with an anti-join against the
-  target's boundary-date rows, so same-date stragglers are picked up
-  and re-runs are idempotent (no duplicates).
+- extraction is ``>=`` the watermark, reconciled against the target's
+  boundary-date rows by a signed per-row count, so same-date stragglers
+  are picked up and re-runs are idempotent (no duplicates).
 
-At 100 TB the anti-join touches ONLY the boundary date's partition on
-both sides (partition pruning on the equality filter), so its cost is
-one date-partition scan, not a full-table join.
+Neither table is partitioned and the Bronze date is parsed from a raw
+string, so the extract scans both tables in full, then shuffles only the
+increment plus Silver's boundary-date rows (one aggregation, no join).
 """
 
 from __future__ import annotations
@@ -58,41 +58,32 @@ def extract_increment(
     date_col: str = "date",
 ) -> DataFrame:
     """Rows of ``source`` not yet in ``target``, correctly handling the
-    boundary date.
+    boundary date, by one signed-count aggregation on the full row:
+    ``source`` rows dated ``>= watermark`` count +1, ``target`` rows on
+    the boundary date count −1, and each distinct row is loaded as many
+    times as its sum is positive (``source_count − loaded_count``; rows
+    past the watermark have no target counterpart). Same-date stragglers
+    are picked up exactly once (fixes SURVEY §4.3.1) and genuine
+    duplicate rows are neither lost nor double-loaded — an anti-join on a
+    non-unique key would silently collapse them. Silver columns are never
+    NULL, so grouping equals an equi-join on the row.
 
-    - ``> watermark``: strictly new dates — pure pushed-down range scan.
-    - ``== watermark``: boundary-date rows reconciled by per-row COUNT
-      difference against the target (group both sides on the full row,
-      load ``source_count − loaded_count`` copies). Same-date stragglers
-      are picked up exactly once (fixes SURVEY §4.3.1) and genuine
-      duplicate rows are neither lost nor double-loaded — an anti-join
-      on a non-unique key would silently collapse them.
-
-    Both boundary scans carry an equality filter on ``date_col``, so on a
-    date-partitioned table this is one partition on each side, regardless
-    of total table size.
+    Cost: one scan of each side and one shuffle of the increment plus the
+    target's boundary-date rows.
     """
     if watermark is None:
         return source
     wm_date = F.lit(watermark).cast("date")
-    new_dates = source.filter(F.col(date_col) > wm_date)
-    boundary_src = source.filter(F.col(date_col) == wm_date)
-    if target is None:
-        return new_dates.unionByName(boundary_src)
-
     cols = source.columns
-    src_counts = boundary_src.groupBy(*cols).agg(F.count("*").alias("_src_n"))
-    tgt_counts = (
-        target.filter(F.col(date_col) == wm_date)
-        .groupBy(*cols)
-        .agg(F.count("*").alias("_tgt_n"))
-    )
-    missing = (
-        src_counts.join(tgt_counts, on=cols, how="left")
-        .withColumn("_need", F.col("_src_n") - F.coalesce(F.col("_tgt_n"), F.lit(0)))
+    signed = source.filter(F.col(date_col) >= wm_date).withColumn("_n", F.lit(1))
+    if target is not None:
+        loaded = target.filter(F.col(date_col) == wm_date).select(*cols)
+        signed = signed.unionByName(loaded.withColumn("_n", F.lit(-1)))
+    return (
+        signed.groupBy(*cols)
+        .agg(F.sum("_n").alias("_need"))
         .filter(F.col("_need") > 0)
         # re-expand to _need physical rows per distinct row
         .withColumn("_i", F.explode(F.sequence(F.lit(1), F.col("_need"))))
         .select(*cols)
     )
-    return new_dates.unionByName(missing)
