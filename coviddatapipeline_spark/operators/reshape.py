@@ -461,12 +461,18 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three lead keys are BOUNDED, so their rankers skip the
     # approx_percentile cutpoint job — bucketing affects balance only,
     # offsets still come from the exact per-bucket counts. last_order
-    # is calendar-bounded (unix_date DIV 64 ≈ one bucket per ~2 months,
-    # monotone, NULL dates coalesce to bucket 0 = the smallest, where
-    # the cutpoint path puts NULL leads); frequency is its own bucket
-    # (a per-customer order count — ints bounded far below any bucket
-    # explosion, never NULL by construction of count(*), coalesced for
-    # totality anyway). monetary_cents is unbounded: cutpoint path.
+    # is calendar-bounded: unix_date(CAST(last_order AS DATE)) DIV 64
+    # ≈ one bucket per ~2 months. The cast takes o_orderdate stored as
+    # DATE (a no-op) or as TIMESTAMP / TIMESTAMP_NTZ (the day, in the
+    # session's UTC zone for TIMESTAMP), monotone non-decreasing
+    # either way; DIV truncates toward zero, also monotone, so dates
+    # up to 1969-10-29 get negative buckets, down to -11236 for
+    # 0001-01-01. NULL dates coalesce to INT_MIN, below every date
+    # bucket, where the cutpoint path puts NULL leads. frequency is
+    # its own bucket (a per-customer order count — ints bounded far
+    # below any bucket explosion, never NULL by construction of
+    # count(*), coalesced for totality anyway). monetary_cents is
+    # unbounded: cutpoint path.
     def rank(args):
         key, out, bucket = args
         return with_global_row_number(
@@ -481,7 +487,10 @@ def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                     (
                         "last_order",
                         "rn_r",
-                        F.expr("coalesce(unix_date(last_order) DIV 64, 0)"),
+                        F.expr(
+                            "coalesce(unix_date(CAST(last_order AS DATE))"
+                            " DIV 64, -2147483648)"
+                        ),
                     ),
                     ("frequency", "rn_f", F.expr("coalesce(frequency, 0)")),
                     ("monetary_cents", "rn_m", None),

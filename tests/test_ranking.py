@@ -1,9 +1,17 @@
 """Distributed exact global ranking (operators/ranking.py): correctness
-vs the single-partition window it replaces, and plan proof that the
-round-1 ``Exchange SinglePartition`` scale-killer is gone."""
+vs the single-partition window it replaces, plan proof that the
+round-1 ``Exchange SinglePartition`` scale-killer is gone, and the
+``bucket_of`` contract of rfm's recency ranker under either date
+encoding."""
 
 from __future__ import annotations
 
+import datetime as dt
+import os
+
+import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
@@ -15,6 +23,8 @@ from coviddatapipeline_spark.operators.ranking import (
 )
 from coviddatapipeline_spark.plans import assert_no_single_partition, audit
 from coviddatapipeline_spark.queries import catalog
+from tests.conftest import sf_dir
+from tests.parity import compare
 
 
 def test_global_row_number_matches_window(spark, parity_sf_dir):
@@ -223,3 +233,76 @@ def test_running_sum_scale8_and_beyond_context_precision(spark):
             acc += big
             assert Decimal(str(r["run_sum"])) == acc, (r["id"], r["run_sum"], acc)
         assert total == acc
+
+
+# o_orderdate as each encoding the testdata has used: DATE and a
+# tz-naive TIMESTAMP (Spark reads the latter as TIMESTAMP_NTZ).
+_DATE_ENCODINGS = {"date32": pa.date32(), "timestamp_us": pa.timestamp("us")}
+
+
+def _rfm_vs_oracle(spark, orders: pa.Table, sf) -> tuple[bool, str]:
+    """Write ``orders`` as ``sf/orders.parquet`` and compare the
+    rfm_customer_segments builder with its DuckDB oracle over it."""
+    sf.mkdir()
+    path = sf / "orders.parquet"
+    pq.write_table(orders, path)
+    q = catalog.get("rfm_customer_segments")
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW orders AS SELECT * FROM read_parquet('{path}')")
+        return compare(q.fn(spark, str(sf)), con, q.oracle)
+    finally:
+        con.close()
+
+
+def _with_date_encoding(orders: pa.Table, encoding: str) -> pa.Table:
+    i = orders.schema.get_field_index("o_orderdate")
+    col = orders.column(i).cast(_DATE_ENCODINGS[encoding])
+    return orders.set_column(i, "o_orderdate", col)
+
+
+@pytest.mark.parametrize("encoding", sorted(_DATE_ENCODINGS))
+def test_rfm_segments_match_oracle_under_either_date_encoding(
+    spark, tmp_path, encoding
+):
+    """The recency ranker buckets on the customer's last order date; it
+    must accept o_orderdate stored as DATE or as TIMESTAMP and give the
+    oracle's rows under both."""
+    orders = pq.read_table(os.path.join(sf_dir("0.001"), "orders.parquet"))
+    ok, msg = _rfm_vs_oracle(
+        spark, _with_date_encoding(orders, encoding), tmp_path / "sf"
+    )
+    assert ok, msg
+
+
+@pytest.mark.parametrize("encoding", sorted(_DATE_ENCODINGS))
+def test_rfm_null_date_ranks_before_pre_1970_dates(spark, tmp_path, encoding):
+    """A NULL last order sorts first in recency (Spark's ASC default,
+    the oracle's NULLS FIRST). Dates before 1970 have negative day
+    numbers, so the recency bucket must put NULL below them too, or
+    the NULL customer lands mid-ranking and the segments change."""
+    dates = [
+        None,
+        dt.date(1900, 3, 1),
+        dt.date(1901, 6, 15),
+        dt.date(1902, 12, 31),
+        dt.date(1995, 1, 1),
+        dt.date(1995, 4, 2),
+        dt.date(1995, 7, 3),
+        dt.date(1995, 10, 4),
+    ]
+    n = len(dates)
+    orders = pa.table(
+        {
+            "o_orderkey": pa.array(range(1, n + 1), pa.int64()),
+            "o_custkey": pa.array(range(101, 101 + n), pa.int64()),
+            "o_orderstatus": ["O"] * n,
+            "o_totalprice": [100.25 * (n - i) for i in range(n)],
+            "o_orderdate": pa.array(dates, pa.date32()),
+            "o_orderpriority": ["1-URGENT"] * n,
+        }
+    )
+    ok, msg = _rfm_vs_oracle(
+        spark, _with_date_encoding(orders, encoding), tmp_path / "sf"
+    )
+    assert ok, msg
