@@ -17,7 +17,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from coviddatapipeline_spark.queries.catalog import register
-from coviddatapipeline_spark.operators.common import duck_floor_long, t, events
+from coviddatapipeline_spark.operators.common import t, events
 from coviddatapipeline_spark.operators.ranking import const_key
 
 

@@ -195,9 +195,9 @@ def events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Deterministic HTML page template shared by text.text_html_extract
 # (which must strip it back off) and multimodal's WARC container entry
-# (which wraps it into HTTP payloads). Lives HERE because common.py is
-# a fingerprint-salt module: editing the template re-gates the sweep
-# stamps of every consumer in one place.
+# (which wraps it into HTTP payloads). Lives HERE because both import
+# common.py, so editing the template re-gates the sweep stamps of every
+# consumer (catalog.entry_fingerprint hashes each entry's imports).
 HTML_PRE = (
     "<html><head><title>Doc</title>"
     '<style type="text/css">p{margin:0;padding:0}</style>'

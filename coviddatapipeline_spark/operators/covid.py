@@ -54,8 +54,8 @@ def s1_scan_count_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "S6+P2: incremental extract past a high watermark. The range "
         "predicate is pushed into the parquet scan (the Spark analogue of "
-        "the reference evaluating the range inside Elasticsearch); on a "
-        "date-partitioned table this becomes partition pruning."
+        "the reference evaluating the range inside Elasticsearch), where "
+        "row-group min/max statistics can skip row groups wholly below it."
     ),
     tags=("covid", "scan", "watermark"),
 )

@@ -38,7 +38,7 @@ from coviddatapipeline_spark.operators.common import (
     _path_signature,
     t,
 )
-from coviddatapipeline_spark.operators.text import _NORM, _TOKENS, _norm, _tokens
+from coviddatapipeline_spark.operators.text import _TOKENS, _tokens
 from coviddatapipeline_spark.queries.catalog import register
 
 _TOK = _TOKENS.format(x="text")

@@ -27,7 +27,6 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from coviddatapipeline_spark.operators.common import t
-from coviddatapipeline_spark.operators.ranking import const_key
 from coviddatapipeline_spark.queries.catalog import register
 
 # ---------------------------------------------------------------------------

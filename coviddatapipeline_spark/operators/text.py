@@ -2157,8 +2157,6 @@ def _uni_wf_sql(doc_where: str = "") -> str:
 )"""
 
 
-_UNI_WF_SQL = _uni_wf_sql()
-
 # 80/20 doc split for the held-out coverage audit; the explicit
 # ((x % 10) + 10) % 10 form mirrors Spark's pmod on negative ids
 _UNI_TRAIN_WHERE = " AND ((doc_id % 10) + 10) % 10 < 8"

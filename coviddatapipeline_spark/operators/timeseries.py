@@ -587,7 +587,6 @@ def orders_open_backlog_sweepline(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 
 ACF_LAGS = (1, 7, 30)
-_ACF_LAGS_SQL = "(" + ", ".join(str(k) for k in ACF_LAGS) + ")"
 
 # Shared oracle preamble: zero-filled calendar of daily order counts,
 # demeaned WITHOUT division — y_t = n * x_t - S is integer-exact and

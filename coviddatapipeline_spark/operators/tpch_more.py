@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from coviddatapipeline_spark.operators.common import duck_floor_long, t
+from coviddatapipeline_spark.operators.common import t
 from coviddatapipeline_spark.queries.catalog import register
 
 

@@ -61,7 +61,7 @@ def stream_refresh_gold(
     is the escape hatch for multi-sink batches: each trigger appends the
     new Silver rows, then recomputes the Gold aggregates from the full
     Silver table and atomically overwrites them. Gold recompute reads
-    the (partition-prunable) Silver parquet — at 100 TB you'd
+    all of Silver (partitioned by ``batch_id`` only) — at 100 TB you'd
     incrementalize hot aggregates with stateful streaming; full
     recompute is the correct-by-construction baseline the reference
     itself uses (re-issued dashboard queries).

@@ -10,11 +10,19 @@ column must carry the same alias on both sides.
 
 from __future__ import annotations
 
+import ast
+import functools
+import hashlib
 import importlib
+import importlib.util
+import os
+import weakref
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from coviddatapipeline_spark.session import RESULT_CONFS
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -52,53 +60,68 @@ class Query:
     src: QueryFn | None = None  # unwrapped builder (for fingerprinting)
 
 
-# Cross-cutting modules whose behavior flows into MANY entries'
-# results (the global-ranking machinery, the shared table loader /
-# oracle templates, the session confs). Their sources salt EVERY
-# entry fingerprint: module-level hashing alone has a blind spot —
-# an edit to ranking.py changes the semantics of a dozen entries
-# defined in OTHER modules whose own files (and therefore stamps)
-# are untouched.
-_FINGERPRINT_SALT_MODULES = (
-    "coviddatapipeline_spark.operators.ranking",
-    "coviddatapipeline_spark.operators.common",
-    "coviddatapipeline_spark.session",
-    # storage protocol: the versioned-table commit/compact/time-travel
-    # API flows into entries that read their own committed snapshots
-    # back (warehouse_snapshot_diff_cdc), so an edit here must re-gate
-    # stamps like any shared-helper edit
-    "coviddatapipeline_spark.sources",
-)
+# A fingerprint reads package modules below the checkout root. The
+# registry package is not followed: every operator imports `register`
+# from it, but it holds _PRIORITY, which each window rotation rewrites
+# and which changes no result.
+_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_PACKAGE = __name__.split(".")[0]
+_UNFOLLOWED = _PACKAGE + ".queries"
+
+
+def portable_oracle(oracle: str) -> str:
+    """``oracle`` with the checkout root replaced by a fixed token (the
+    binary-ingest oracle names its fixture directory)."""
+    return oracle.replace(_ROOT, "<checkout>")
+
+
+def _module_path(mod: str) -> str | None:
+    base = os.path.join(_ROOT, *mod.split("."))
+    return next(filter(os.path.isfile, (base + ".py", os.path.join(base, "__init__.py"))), None)
+
+
+@functools.cache
+def _parsed(mod: str) -> tuple[str, frozenset[str]]:
+    """(``ast.dump`` without docstrings, package modules it imports)."""
+    path = _module_path(mod)
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    package = mod if path.endswith("__init__.py") else mod.rpartition(".")[0]
+    imported: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)) \
+                and ast.get_docstring(node, clean=False) is not None:
+            del node.body[0]
+        elif isinstance(node, ast.Import):
+            imported.update(alias.name for alias in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            # `from a.b import c` imports module a.b, and a.b.c too if c
+            # is a submodule
+            base = importlib.util.resolve_name("." * node.level + (node.module or ""), package)
+            imported.update([base, *(f"{base}.{alias.name}" for alias in node.names)])
+    return ast.dump(tree), frozenset(
+        m for m in imported if m.split(".")[0] == _PACKAGE
+        and not f"{m}.".startswith(f"{_UNFOLLOWED}.") and _module_path(m))
 
 
 def entry_fingerprint(name: str) -> str:
-    """Content hash of an entry: its defining module's source + oracle
-    + the shared-helper salt modules above.
-
-    The sweep gate (tools/sweep_oracles.py + tests/test_window_swept.py)
-    stamps each locally-verified entry with this hash; editing any code
-    in the entry's module, its oracle, or a shared helper invalidates
-    the stamp, so an unswept or stale entry cannot sit in the driver's
-    50-slot window without a red test. Module-level hashing is
-    deliberately conservative: touching one function re-gates every
-    entry in that module (and touching a salt module re-gates ALL
-    entries), which is exactly when a re-sweep is wanted.
-    """
-    import hashlib
-    import importlib
-    import inspect
-    import sys as _sys
-
+    """What a sweep stamp certifies: sha256 over the oracle text (through
+    :func:`portable_oracle`) and over ``ast.dump``, docstrings removed, of
+    every package module the entry imports, transitively and inside
+    functions too, from its own module and the session module (a stamp
+    certifies a green under ``get_spark``'s confs), not entering
+    ``_UNFOLLOWED``. Only code edits change it, a constant included; a new
+    Python version may change ``ast.dump`` and so re-gate every entry."""
     q = get(name)
-    src_fn = q.src or q.fn
-    mod_file = inspect.getfile(_sys.modules[src_fn.__module__])
+    seen: set[str] = set()
+    todo = {(q.src or q.fn).__module__, _PACKAGE + ".session"}
+    while todo:
+        seen |= todo
+        todo = set().union(*(_parsed(mod)[1] for mod in todo)) - seen
     h = hashlib.sha256()
-    with open(mod_file, "rb") as f:
-        h.update(f.read())
-    for salt_mod in _FINGERPRINT_SALT_MODULES:
-        with open(inspect.getfile(importlib.import_module(salt_mod)), "rb") as f:
-            h.update(f.read())
-    h.update((q.oracle or "").encode())
+    for mod in sorted(seen):
+        h.update(f"{mod}\n{_parsed(mod)[0]}\n".encode())
+    h.update(portable_oracle(q.oracle or "").encode())
     return h.hexdigest()
 
 
@@ -196,41 +219,21 @@ def _ordered() -> dict[str, Query]:
     return out
 
 
-# Session confs every query depends on for oracle parity, applied
-# defensively at call time: the driver passes its OWN SparkSession,
-# which need not have been built by our session factory. All three are
-# runtime-settable SQL confs (verified on a vanilla session).
-_REQUIRED_CONFS = {
-    # Some driver rounds generate events.parquet with TIMESTAMP(NANOS),
-    # which the vectorized reader rejects; this reads those as epoch-nanos
-    # longs (common.events converts via ts DIV 1000). No-op for the
-    # TIMESTAMP(MICROS) layout other rounds generate.
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # DuckDB timestamps are UTC-naive; date_format must agree.
-    "spark.sql.session.timeZone": "UTC",
-    # Arrow batch transfer for the Pandas-UDF escape hatches.
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-}
-
-
+# RESULT_CONFS are applied again at call time: the driver passes its
+# OWN SparkSession, which need not have been built by get_spark.
 # Sessions already checked by _ensure_confs: each conf.get/set is a
 # py4j round-trip paid on EVERY query build otherwise (3 gets x every
 # builder call adds up across a 50-entry driver pass and a min-of-5
 # bench). A session whose confs were ensured once stays ensured — these
 # keys are only ever set, never unset, by this module (a caller who
 # mutates them afterwards is outside the driver contract).
-_CONFS_ENSURED: "WeakSet[SparkSession]" = None  # initialized below
+_CONFS_ENSURED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
 
 
 def _ensure_confs(spark: SparkSession) -> None:
-    global _CONFS_ENSURED
-    if _CONFS_ENSURED is None:
-        from weakref import WeakSet
-
-        _CONFS_ENSURED = WeakSet()
     if spark in _CONFS_ENSURED:
         return
-    for k, v in _REQUIRED_CONFS.items():
+    for k, v in RESULT_CONFS.items():
         try:
             if spark.conf.get(k, None) != v:
                 spark.conf.set(k, v)

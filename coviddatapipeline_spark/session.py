@@ -22,6 +22,21 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+# Confs that query results depend on for oracle parity. get_spark sets
+# them, and every registry call sets them on a session it did not build
+# (catalog._ensure_confs). All three are runtime-settable SQL confs.
+RESULT_CONFS = {
+    # events.parquet may store TIMESTAMP(NANOS), which the vectorized
+    # reader rejects; read it as epoch-nanos longs and convert
+    # (ts DIV 1000 -> timestamp_micros), matching DuckDB's µs truncation.
+    # A no-op for TIMESTAMP(MICROS) files.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # DuckDB timestamps are UTC-naive; date_format must agree.
+    "spark.sql.session.timeZone": "UTC",
+    # Arrow batch transfer for the Pandas-UDF escape hatches.
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+}
+
 
 def get_spark(
     app_name: str = "coviddatapipeline_spark",
@@ -46,18 +61,13 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         # Parquet scans: keep row-group pruning + column pruning effective.
         .config("spark.sql.parquet.filterPushdown", "true")
-        # events.parquet stores TIMESTAMP(NANOS); read as long and convert
-        # (ts DIV 1000 -> timestamp_micros), matching DuckDB's µs truncation.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**RESULT_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -6,17 +6,17 @@ Spark-first, that collapses to Parquet medallion tables:
 
 - S1 CSV full scan            -> read_csv (header, explicit/permissive schema)
 - S3 ES bulk sink             -> write_parquet(mode="append"|"overwrite") Bronze
-- S4 create-index-if-absent   -> write mode "ignore" / tableExists
+- S4 create-index-if-absent   -> write mode "ignore"
 - S5 truncate index           -> write mode "overwrite"
-- S6 ES incremental search    -> read_parquet + pushed-down watermark filter
+- S6 ES incremental search    -> read_parquet + watermark filter
 - S7 Postgres DDL             -> saveAsTable / CREATE TABLE IF NOT EXISTS
 - S8 Postgres row-append sink -> write_parquet(mode="append") Silver
 
 Every reader returns a lazy DataFrame; Catalyst pushes projections and
 predicates into the Parquet scan (check with ``df.explain`` →
-``PushedFilters`` / ``ReadSchema``). At 100 TB the Bronze/Silver tables
-are date-partitioned directories so the watermark filter becomes
-partition pruning, not a scan.
+``PushedFilters`` / ``ReadSchema``). No covid table is date-partitioned,
+and the watermark filter applies to a date parsed from a raw Bronze
+string, so the incremental extract scans Bronze in full (watermark.py).
 """
 
 from __future__ import annotations
@@ -69,17 +69,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names=TESTDATA_TABLES) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=TESTDATA_TABLES) -> None:
-    """Register testdata tables as temp views so operators can be written
-    in either DataFrame or SQL form (Catalyst produces the same plan)."""
-    for n in names:
-        read_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 def write_parquet(
     df: DataFrame,
     path: str,
@@ -95,9 +84,9 @@ def write_parquet(
     - mode="ignore"     ≙ create-if-absent DDL (S4,
       /root/reference/ingest_csv_to_elastic.py:36-55)
 
-    ``partition_by`` replaces the reference's Postgres B-tree indexes
-    (/root/reference/scripts/postgres_db_scripts.sql:17-19) with
-    partition pruning — the scale-correct equivalent.
+    ``partition_by`` writes one directory per value, so filters on it
+    prune directories. The covid tables pass none, so nothing replaces
+    the reference's B-tree indexes (scripts/postgres_db_scripts.sql:17-19).
     """
     writer = df.write.mode(mode)
     if partition_by:
@@ -184,17 +173,6 @@ def write_bucketed_table(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(name)
-
-
-def table_exists(spark: SparkSession, path: str) -> bool:
-    """Existence predicate (P6) for path-based tables — the Spark analogue
-    of the reference's HTTP HEAD index check
-    (/root/reference/ingest_csv_to_elastic.py:36-39)."""
-    try:
-        spark.read.parquet(path).schema
-        return True
-    except Exception:
-        return False
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:

@@ -62,9 +62,14 @@ def test_snapshot_roundtrip_matches_live_registry(tmp_path, monkeypatch):
 
     qs = catalog.all_queries()
     assert snap["window"] == [n for n in list(qs)[:50] if qs[n].oracle is not None]
-    # every recorded hash is the md5 of the live oracle text
-    for n, h in list(snap["oracles"].items())[:20]:
-        assert h == hashlib.md5(qs[n].oracle.encode()).hexdigest()
+    # every recorded hash is the md5 of the live oracle text, with the
+    # checkout root tokenized
+    for n, h in snap["oracles"].items():
+        assert h == hashlib.md5(catalog.portable_oracle(qs[n].oracle).encode()).hexdigest()
+    # the one oracle that names a checkout path hashes without it
+    binary = qs["mm_binary_file_ingest"].oracle
+    assert catalog._ROOT in binary
+    assert catalog._ROOT not in catalog.portable_oracle(binary)
     assert len(snap["oracles"]) == sum(1 for q in qs.values() if q.oracle)
     # impl hashes: md5 of the live builder-function source (r11+)
     import inspect

@@ -4,12 +4,12 @@ The driver's correctness gate hash-checks the FIRST 50 entries of
 ``queries()`` iteration order. This test makes it impossible to rotate
 an entry into that window without a CURRENT local driver-faithful green
 at sf0.001 AND sf0.1: ``tools/sweep_oracles.py`` stamps every green
-entry with ``catalog.entry_fingerprint`` (hash of the entry's module
-source + oracle text) into ``tools/sweep_stamps/<sf>.json``, and this
-test — pure hashing, no Spark jobs — asserts every oracle-backed window
-entry carries a matching stamp at both scales. Editing any code in an
-entry's module, or its oracle, invalidates the stamp and turns this
-red until the sweep is re-run. The two scales are the ones that catch
+entry with ``catalog.entry_fingerprint`` into
+``tools/sweep_stamps/<sf>.json``, and this test — pure hashing, no
+Spark jobs — asserts every oracle-backed window entry carries a
+matching stamp at both scales. An edit that changes the fingerprint
+(its docstring says which edits do) turns this red until the sweep is
+re-run. The two scales are the ones that catch
 data-dependent cross-engine classes: the rounding-tie class appeared
 only at sf0.001, the int64-overflow class only at sf0.1.
 
@@ -21,8 +21,12 @@ Refresh with:
 
 from __future__ import annotations
 
+import ast
 import json
 import os
+import shutil
+import subprocess
+import sys
 
 import pytest
 
@@ -30,11 +34,8 @@ from coviddatapipeline_spark.queries import catalog
 
 WINDOW = 50
 GATED_SFS = ("sf0.001", "sf0.1")
-STAMP_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "tools",
-    "sweep_stamps",
-)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+STAMP_DIR = os.path.join(ROOT, "tools", "sweep_stamps")
 
 
 def _stamps(sf: str) -> dict[str, str]:
@@ -64,8 +65,8 @@ def test_every_window_entry_has_current_sweep_stamp(sf):
         f"driver-window entries not locally swept at {sf}: "
         f"missing={missing} stale={stale} — run "
         f"SWEEP_SF_DIR=/root/testdata/{sf} python tools/sweep_oracles.py "
-        f"(a stale stamp means the entry's module or oracle changed "
-        f"after its last sweep)"
+        f"(a stale stamp means catalog.entry_fingerprint changed "
+        f"after its last sweep; its docstring says what it covers)"
     )
 
 
@@ -77,3 +78,124 @@ def test_fingerprint_tracks_oracle_and_module(tmp_path, monkeypatch):
     q = catalog.get(name)
     monkeypatch.setattr(q, "oracle", q.oracle + " -- perturbed")
     assert catalog.entry_fingerprint(name) != before
+
+
+# --- what the fingerprint covers: pure hashing over copies of the package
+# at other paths, each loaded in a fresh interpreter (no Spark session)
+
+_DUMP_FINGERPRINTS = """
+import json, os
+from coviddatapipeline_spark.queries import catalog
+assert catalog.__file__.startswith(os.getcwd()), catalog.__file__
+print(json.dumps({n: catalog.entry_fingerprint(n) for n in catalog.all_queries()}))
+"""
+
+
+def _rewrite(path, edit):
+    with open(path) as f:
+        src = f.read()
+    out = edit(src)
+    assert out != src, f"edit left {path} unchanged"
+    with open(path, "w") as f:
+        f.write(out)
+
+
+def _edit_docs(src: str) -> str:
+    """Reword the module docstring and the first function docstring, and
+    add a comment."""
+    tree = ast.parse(src)
+    lines = src.splitlines(keepends=True)
+    fn = next(n for n in tree.body if isinstance(n, ast.FunctionDef))
+    for node in (tree, fn):
+        i = node.body[0].lineno - 1
+        lines[i] = lines[i].replace('"""', '"""Reworded. ', 1)
+    return "# an added comment\n" + "".join(lines)
+
+
+def _edit_first_int(src: str) -> str:
+    """Add one to the first integer literal: a one-token code edit."""
+    node = next(
+        n for n in ast.walk(ast.parse(src))
+        if isinstance(n, ast.Constant) and type(n.value) is int
+    )
+    lines = src.splitlines(keepends=True)
+    line = lines[node.lineno - 1].encode()
+    lines[node.lineno - 1] = (
+        line[: node.col_offset] + str(node.value + 1).encode() + line[node.end_col_offset :]
+    ).decode()
+    return "".join(lines)
+
+
+def _edit_priority(first: str):
+    anchor = "_PRIORITY: tuple[str, ...] = (\n"
+    return lambda src: src.replace(anchor, f"{anchor}    {first!r},\n", 1)
+
+
+def _unpinned() -> str:
+    """The first registry entry that _PRIORITY does not pin."""
+    return next(n for n in catalog.all_queries() if n not in catalog._PRIORITY)
+
+
+@pytest.fixture(scope="module")
+def copy_fingerprints(tmp_path_factory):
+    """entry -> fingerprint in four package copies at other paths:
+    unedited, and with one edit each. The interpreters run in parallel."""
+    edits = {
+        "unedited": None,
+        "sources_docs": ("sources.py", _edit_docs),
+        "text_token": ("operators/text.py", _edit_first_int),
+        "priority": ("queries/catalog.py", _edit_priority(_unpinned())),
+    }
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    procs = {}
+    for key, edit in edits.items():
+        root = tmp_path_factory.mktemp(key)
+        pkg = os.path.join(root, "coviddatapipeline_spark")
+        shutil.copytree(
+            os.path.join(ROOT, "coviddatapipeline_spark"), pkg,
+            ignore=shutil.ignore_patterns("__pycache__"),
+        )
+        if edit:
+            _rewrite(os.path.join(pkg, edit[0]), edit[1])
+        procs[key] = subprocess.Popen(
+            [sys.executable, "-c", _DUMP_FINGERPRINTS],
+            cwd=root, env=env, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+        )
+    out = {}
+    for key, proc in procs.items():
+        stdout, stderr = proc.communicate(timeout=120)
+        assert proc.returncode == 0, stderr[-2000:]
+        out[key] = json.loads(stdout)
+    return out
+
+
+def test_fingerprint_is_checkout_path_independent(copy_fingerprints):
+    live = {n: catalog.entry_fingerprint(n) for n in catalog.all_queries()}
+    moved = copy_fingerprints["unedited"]
+    assert len(moved) == len(live)
+    assert "mm_binary_file_ingest" in moved
+    assert [n for n in live if moved.get(n) != live[n]] == []
+
+
+def test_fingerprint_ignores_docstrings_and_comments(copy_fingerprints):
+    base, edited = copy_fingerprints["unedited"], copy_fingerprints["sources_docs"]
+    assert [n for n in base if edited[n] != base[n]] == []
+
+
+def test_fingerprint_follows_transitive_imports(copy_fingerprints):
+    """text.py is imported by dedup.py, so a code edit in text.py must
+    re-gate every dedup.py entry, and not every entry."""
+    base, edited = copy_fingerprints["unedited"], copy_fingerprints["text_token"]
+    changed = {n for n in base if edited[n] != base[n]}
+    dedup = {
+        n for n, q in catalog.all_queries().items()
+        if (q.src or q.fn).__module__ == "coviddatapipeline_spark.operators.dedup"
+    }
+    assert dedup and dedup <= changed
+    assert len(changed) < len(base)
+
+
+def test_fingerprint_ignores_window_priority(copy_fingerprints):
+    base, edited = copy_fingerprints["unedited"], copy_fingerprints["priority"]
+    assert next(iter(edited)) == _unpinned() != next(iter(base))
+    assert edited == base

@@ -18,11 +18,8 @@ md5s + the window that round installed), and prints:
     the hash is the entry function's own source (inspect.getsource of
     the registered builder), so a rewrite of the entry is always
     caught; an edit to a SHARED helper the function calls is not
-    flagged here — that class is still force-re-swept locally at all
-    three SFs by the stamp gate's module+salt fingerprint
-    (catalog.entry_fingerprint / tests/test_window_swept.py), which is
-    deliberately module-conservative where this planner is
-    function-precise.
+    flagged here. The sweep stamps re-gate that class locally; what
+    they cover is defined in catalog.entry_fingerprint's docstring.
   - a proposed next `_PRIORITY` fill: the pinned sentinels, then
     never-checked entries breadth-first by module, then the
     changed-oracle debt, then the impl-changed debt, then (if slots
@@ -72,7 +69,7 @@ def _oracle_md5s() -> dict[str, str]:
 
     qs = catalog.all_queries()
     return {
-        n: hashlib.md5(q.oracle.encode()).hexdigest()
+        n: hashlib.md5(catalog.portable_oracle(q.oracle).encode()).hexdigest()
         for n, q in qs.items()
         if q.oracle is not None
     }
@@ -98,10 +95,12 @@ def take_snapshot(tag: str, window: int) -> int:
     """Record {window: [...], oracles: {entry: md5}} for this round.
     The planner replays snapshots in tag order to build the
     last-driver-verified-oracle ledger. Oracle text (not the sweep
-    fingerprint) is the right granularity here: the sweep fingerprint
-    salts SHARED modules, so one helper edit marks all ~280 entries
-    changed — correct for stamp re-gating, useless for window
-    planning. Implementation-only changes (oracle untouched) still get
+    fingerprint, catalog.entry_fingerprint) is the right granularity
+    here: one shared-helper edit changes the fingerprints of every
+    entry that imports it — correct for stamp re-gating, far too wide
+    for window planning. Oracle text is hashed through
+    catalog.portable_oracle, so snapshots do not depend on the checkout
+    path. Implementation-only changes (oracle untouched) still get
     hand-added to the window per the changed-impl policy; the impls
     map (function-source md5s) computes THAT debt too since r11."""
     qs = catalog.all_queries()

@@ -5,8 +5,9 @@ correctness scale) through tests.parity.compare and prints one line per
 failure. Exit 0 iff all green.
 
 Each green entry is STAMPED into tools/sweep_stamps/<sf>.json with
-catalog.entry_fingerprint (module source + oracle hash); the committed
-stamps are what tests/test_window_swept.py checks, so an entry cannot
+catalog.entry_fingerprint (its docstring says what the hash covers);
+the committed stamps are what tests/test_window_swept.py checks, so an
+entry cannot
 rotate into the driver's 50-slot window without a current local green
 at sf0.001 AND sf0.1 (VERDICT r03 #6 — this gate is what caught the
 rounding-tie and HUGEINT oracle classes in earlier rounds).
