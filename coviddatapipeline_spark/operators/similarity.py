@@ -377,6 +377,102 @@ def label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --- exact within-cell Gram kernel ------------------------------------
+
+# Slab width of the reducers' Gram blocks: per-task memory is
+# O(cell_rows x _GRAM_CHUNK) doubles, never cell_rows^2.
+_GRAM_CHUNK = 4096
+
+
+def _cell_gram(cells: DataFrame, cell: str, reduce, extra: str = "") -> DataFrame:
+    """Exact within-cell cosines over a (vec_id, <cell>, v) frame, one
+    grouped-map task per cell, reduced per cell by ``reduce``: the
+    kernel behind ``semdedup_prune_report`` and
+    ``knn_within_cell_report``. It replaces their pair-exploding
+    self-join on the cell key and reproduces that join row for row:
+
+    - exactness: ``gram(a, b)`` accumulates the Gram block DIMENSION
+      BY DIMENSION from 0.0 (``G += outer(x[d], y[d])``), the left-to-right
+      IEEE order of the join's fold
+      ``aggregate(zip_with(va, vb, x * y), 0.0, acc + x)`` for every
+      pair at once. Catalyst does not reassociate double addition, so
+      both are the same float sequence; callers round JVM-side;
+    - a NULL cell never equi-joined, and a NULL vec_id fails every
+      vec_id condition: such rows are never paired;
+    - a NULL vector, a vector with a NULL element, or one of the wrong
+      shape had a NULL dot with every partner. Such a row is not
+      ``valid``: its pairs are NULL. The NULL-element flag is computed
+      JVM-side (``exists(v, isNull)``), because Arrow erases the
+      null-vs-NaN distinction inside float lists. Every current load
+      site filters ``size == EMB_DIM``;
+    - a NaN coordinate propagates into the cosine, and Spark orders
+      NaN greatest. NaN travels back as the ``cos_nan`` flag, because
+      the pandas -> Arrow serializer turns NaN into NULL;
+    - duplicate vec_ids: the join paired each ROW of one id with the
+      rows of other ids, and the caller's per-id step (a GROUP BY, a
+      window) merged the rows of an id. Each reducer merges per unique
+      vec_id the same way, within the cell.
+
+    ``reduce(ids, joins, valid, gram)`` sees one cell sorted by vec_id
+    (NULLs last): the ids, the rows that take part in a join, the rows
+    with a valid vector, and ``gram(a, b)``, the exact dot-product
+    block of row indices ``a`` x ``b``. It returns its output columns,
+    which include ``vec_id``, ``cos`` and ``null`` (True where the
+    cosine is NULL); ``extra`` declares those besides vec_id, the cell
+    and the cosine. The result also carries the cell key, and ``cos``
+    with NaN rebuilt. Rows reach their cell in one shuffle. Everything
+    the workers run is nested here or in the caller, so cloudpickle
+    ships it by value: the workers need not import this package."""
+    import numpy as np
+    import pandas as pd
+
+    dim = EMB_DIM
+    vec_t = cells.schema["vec_id"].dataType.simpleString()
+    cell_t = cells.schema[cell].dataType.simpleString()
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("vec_id", na_position="last", kind="mergesort")
+        ids = pdf["vec_id"].to_numpy()
+        joins = (pdf["vec_id"].notna() & pdf[cell].notna()).to_numpy()
+        vt = np.zeros((dim, len(pdf)))  # one contiguous row per dimension
+        valid = np.zeros(len(pdf), dtype=bool)
+        for r, (v, has_null) in enumerate(zip(pdf["v"], pdf["has_null_elem"])):
+            if joins[r] and v is not None and not has_null:
+                a = np.asarray(v, dtype=np.float64)
+                if a.shape == (dim,):
+                    vt[:, r], valid[r] = a, True
+
+        def gram(a, b):
+            x, y = vt[:, a], vt[:, b]
+            g = np.zeros((x.shape[1], y.shape[1]))
+            xy = np.empty_like(g)
+            for d in range(dim):
+                g += np.outer(x[d], y[d], out=xy)
+            return g
+
+        out = reduce(ids, joins, valid, gram)
+        null = out.pop("null")
+        nan = np.isnan(out["cos"]) & ~null
+        out["cos"] = np.where(null | nan, np.nan, out["cos"])
+        out["cos_nan"] = nan
+        res = pd.DataFrame(out)
+        res[cell] = pdf[cell].iloc[0]
+        return res
+
+    cols = (f"vec_id {vec_t}", f"{cell} {cell_t}", extra, "cos double")
+    schema = ", ".join(c for c in cols if c)
+    return (
+        cells.withColumn("has_null_elem", F.exists("v", lambda x: x.isNull()))
+        .groupBy(cell)
+        .applyInPandas(kernel, schema + ", cos_nan boolean")
+        .withColumn(
+            "cos",
+            F.when(F.col("cos_nan"), F.lit(float("nan"))).otherwise(F.col("cos")),
+        )
+        .drop("cos_nan")
+    )
+
+
 # --- k-NN graph and hyperplane LSH -----------------------------------
 
 KNN_K = 3
@@ -433,162 +529,72 @@ def knn_within_cell_report(cells: DataFrame) -> DataFrame:
     shared by ``knn_graph_within_cell`` and (through it)
     ``graph_semantic_clusters``.
 
-    OPTIMIZATION_r13 §4 (guide §4.2, the §B2 semdedup precedent): the
-    per-pair cosines are computed per cell inside an Arrow-batched
-    NumPy kernel instead of the pair-exploding self-join whose
-    interpreted zip_with/aggregate fold dominated the entry (measured
-    2.6 s -> sub-second at sf0.1, identical rows). Exactness: the
-    kernel accumulates the Gram block DIMENSION BY DIMENSION
-    (``G += v[:, d] * v[d, :]``), reproducing the fold's left-to-right
-    IEEE addition order for every pair simultaneously (0.0 + x == x
-    exactly; Catalyst does not reassociate double addition), and the
-    raw double is rounded JVM-side by the same F.round the join
-    formulation used. Top-k selection reproduces the window's
-    ``ORDER BY cos DESC, neighbor_id`` total order including Spark's
-    double ordering seams: NaN greatest (sorts FIRST under DESC),
-    NULL cosines LAST, ties by neighbor_id ascending.
+    The cosines come from ``_cell_gram``, whose docstring states the
+    exactness, NULL/NaN and duplicate-id rules; the join + window it
+    replaced (OPTIMIZATION_r13 §4) is the differential reference in
+    tests/test_optimization_r13.py.
 
-    Join-formulation semantics preserved (pinned by
-    tests/test_optimization_r13.py's corpus + degenerate-row
-    differentials against the inlined old formulation):
-
-    - NULL label: the equi-join never matched it — the kernel emits
-      nothing for the whole NULL-cell group;
-    - NULL vec_id: ``a.vec_id != b.vec_id`` is NULL — such a row is
-      neither a source nor a candidate;
-    - a NULL vector / NULL-element vector has NULL dot with every
-      partner: as a CANDIDATE it carries a NULL cosine (ranked last,
-      still emitted when the cell has few real candidates — exactly
-      what the window kept); as a SOURCE all its candidates are NULL;
-    - a NaN coordinate propagates and the NaN cosine ranks FIRST;
-    - duplicate vec_id values: the join paired every ROW of one id
-      with every row of a different id and the window merged them into
-      one partition per id — the kernel builds the same merged
-      candidate list;
-    - NaN travels back as an explicit flag column (the pandas -> Arrow
-      serializer coerces NaN to NULL — the §B2 lesson).
-
-    Memory: the Gram block is computed in <= _PRUNE_CHUNK-row source
-    slabs, so per-task memory is O(cell_rows x chunk), never
-    cell_rows^2; cell size itself is bounded by the quantizer's K
-    exactly as in the IVF index this shares its partitioning with."""
+    Reducer: each vector's top ``KNN_K`` other ids in the window's
+    ``ORDER BY cos DESC, neighbor_id`` order, Spark's double ordering
+    seams included — a NaN cosine (the greatest double) first, NULL
+    cosines last but still emitted when the cell has few real
+    candidates, ties by neighbor_id ascending. Each source slab keeps
+    its rows' top k; rows that share a vec_id are then merged into one
+    list, as the window partitioned by the id value. That is sound:
+    an entry of the merged top k beats fewer than k candidates
+    overall, hence fewer than k in its own row."""
     import numpy as np
-    import pandas as pd
 
-    lab_t = cells.schema["label"].dataType.simpleString()
     vec_t = cells.schema["vec_id"].dataType.simpleString()
-    dim = EMB_DIM
-    chunk = _PRUNE_CHUNK
+    chunk = _GRAM_CHUNK
     k = KNN_K
 
-    def _cell_knn(pdf: pd.DataFrame) -> pd.DataFrame:
-        o_src: list = []
-        o_nb: list = []
-        o_rank: list = []
-        o_cos: list = []
-        o_nan: list = []
-        # NULL cell: the equi-join never matched it -> no output rows
-        if len(pdf) > 1 and not pdf["label"].isna().all():
-            # NULL vec_id rows are invisible to the != join condition
-            pdf = pdf[~pdf["vec_id"].isna()].reset_index(drop=True)
-            m = len(pdf)
-            if m > 1:
-                vids = pdf["vec_id"].to_numpy()
-                vm = np.zeros((m, dim), dtype=np.float64)
-                valid = np.zeros(m, dtype=bool)
-                for r, (row, has_null) in enumerate(
-                    zip(pdf["v"], pdf["has_null_elem"])
-                ):
-                    if row is None or has_null or has_null is None:
-                        continue
-                    a = np.asarray(row, dtype=np.float64)
-                    if a.shape != (dim,):
-                        continue
-                    vm[r] = a
-                    valid[r] = True
-                # The window partitions by vec_id VALUE, so duplicate-id
-                # source ROWS share one merged candidate list. Per-row
-                # top-k first (sound: anything in the merged top-k beats
-                # fewer than k candidates overall, hence fewer than k in
-                # its own row — so it IS in its row's top-k), then merge
-                # per unique id below. Bounded state: <= m x k entries.
-                per_id: dict = {}
-                for lo in range(0, m, chunk):
-                    hi = min(lo + chunk, m)
-                    # dim-order accumulation == the fold's add order
-                    g = vm[lo:hi, 0:1] * vm[:, 0][None, :]
-                    for d in range(1, dim):
-                        g += vm[lo:hi, d : d + 1] * vm[:, d][None, :]
-                    for i in range(lo, hi):
-                        cand = np.nonzero(vids != vids[i])[0]
-                        if len(cand) == 0:
-                            continue
-                        cos = g[i - lo, cand]
-                        both_valid = valid[i] & valid[cand]
-                        isnan = np.isnan(cos) & both_valid
-                        # sortkey: NaN first (window DESC puts NaN,
-                        # the greatest double, first), then cos desc,
-                        # then NULL cosines last; ties neighbor_id asc
-                        sortkey = np.where(
-                            both_valid, np.where(isnan, -np.inf, -cos), np.inf
-                        )
-                        order = np.lexsort((vids[cand], sortkey))[:k]
-                        bucket = per_id.setdefault(vids[i], [])
-                        for j in order:
-                            cj = cand[j]
-                            bucket.append(
-                                (
-                                    float(sortkey[j]),
-                                    vids[cj],
-                                    None if not both_valid[j] else float(cos[j]),
-                                    bool(isnan[j]),
-                                )
-                            )
-                for uid, bucket in per_id.items():
-                    bucket.sort(key=lambda e: (e[0], e[1]))
-                    for rk, (_, nb, cv, cnan) in enumerate(
-                        bucket[:k], start=1
-                    ):
-                        o_src.append(uid)
-                        o_nb.append(nb)
-                        o_rank.append(rk)
-                        if cnan:
-                            o_cos.append(0.0)  # placeholder -> NaN
-                            o_nan.append(True)
-                        elif cv is None:
-                            o_cos.append(None)
-                            o_nan.append(False)
-                        else:
-                            o_cos.append(cv)
-                            o_nan.append(False)
-        return pd.DataFrame(
-            {
-                "vec_id": pd.Series(o_src),
-                "neighbor_id": pd.Series(o_nb),
-                "rank": pd.Series(o_rank, dtype="int32"),
-                "cos": pd.Series(o_cos, dtype="float64"),
-                "cos_nan": pd.Series(o_nan, dtype="bool"),
-            }
-        )
+    def top_k(ids, joins, valid, gram):
+        src = np.flatnonzero(joins)
+        sid = ids[src]
+        m, kk = len(src), min(k, len(src))
+        # per source row, its kk best (class, -cos, neighbor, cos)
+        cls_k = np.empty((m, kk), dtype=np.int8)
+        neg_k = np.empty((m, kk))
+        nb_k = np.empty((m, kk), dtype=sid.dtype)
+        cos_k = np.empty((m, kk))
+        for lo in range(0, m, chunk):
+            s = src[lo : lo + chunk]
+            g = gram(s, src)
+            # class 0: NaN, 1: a cosine, 2: NULL (an invalid side),
+            # 3: the row's own id, which the != join never paired
+            both = valid[s][:, None] & valid[src][None, :]
+            cls = np.where(both, np.where(np.isnan(g), 0, 1), 2).astype(np.int8)
+            cls[ids[s][:, None] == sid[None, :]] = 3
+            neg = np.where(cls == 1, -g, 0.0)
+            nb = np.broadcast_to(sid, g.shape)
+            o = np.lexsort((nb, neg, cls), axis=-1)[:, :kk]
+            r = np.arange(len(s))[:, None]
+            hi = lo + len(s)
+            cls_k[lo:hi], neg_k[lo:hi] = cls[r, o], neg[r, o]
+            nb_k[lo:hi], cos_k[lo:hi] = nb[r, o], g[r, o]
+        # merge the rows of each vec_id (a no-op when ids are unique)
+        src_id = np.repeat(sid, kk)
+        cls, neg, nb, cos = (a.ravel() for a in (cls_k, neg_k, nb_k, cos_k))
+        o = np.lexsort((nb, neg, cls, src_id))
+        o = o[cls[o] < 3]
+        gid = src_id[o]
+        first = np.ones(len(o), dtype=bool)
+        first[1:] = gid[1:] != gid[:-1]
+        pos = np.arange(len(o))
+        rank = pos - np.maximum.accumulate(np.where(first, pos, 0)) + 1
+        o, gid, rank = o[rank <= k], gid[rank <= k], rank[rank <= k]
+        return {
+            "vec_id": gid,
+            "neighbor_id": nb[o],
+            "rank": rank.astype(np.int32),
+            "cos": cos[o],
+            "null": cls[o] == 2,
+        }
 
-    raw = (
-        cells.withColumn("has_null_elem", F.exists("v", lambda x: x.isNull()))
-        .groupBy("label")
-        .applyInPandas(
-            _cell_knn,
-            f"vec_id {vec_t}, neighbor_id {vec_t}, rank int, "
-            f"cos double, cos_nan boolean",
-        )
-    )
-    return raw.select(
-        "vec_id",
-        "neighbor_id",
-        "rank",
-        F.round(
-            F.when(F.col("cos_nan"), F.lit(float("nan"))).otherwise(F.col("cos")),
-            4,
-        ).alias("cosine"),
-    )
+    return _cell_gram(
+        cells, "label", top_k, f"neighbor_id {vec_t}, rank int"
+    ).select("vec_id", "neighbor_id", "rank", F.round("cos", 4).alias("cosine"))
 
 
 def _lsh_sig_spark() -> Column:
@@ -1030,9 +1036,6 @@ def ann_ivf_rebalance_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SEMDEDUP_TAU = 0.2  # prune when cosine to an earlier same-cell vector exceeds this
 NO_EARLIER = -2.0  # sentinel: first vector of its cell (cosine is always >= -1)
-# Gram-block slab width for the prune kernel: per-task memory is
-# O(cell_rows x _PRUNE_CHUNK) doubles, never cell_rows^2.
-_PRUNE_CHUNK = 4096
 
 
 @register(
@@ -1087,132 +1090,47 @@ def semdedup_prune_report(cells: DataFrame) -> DataFrame:
     dedup partitioning cannot drift. One shuffle on the cell key;
     pairwise work Sigma(cell^2), never corpus^2.
 
-    OPTIMIZATION_r12 §B2 (guide §4.2): the max-earlier-cosine is
-    computed per cell inside an Arrow-batched NumPy kernel instead of
-    the pair-exploding self-join + interpreted zip_with/aggregate fold
-    (measured 2.1 s -> 0.6 s on the sf0.1 label cells, bit-identical
-    outputs). Exactness: the kernel accumulates the Gram block
-    DIMENSION BY DIMENSION (``G += v[:, d] * v[d, :]`` for d = 1..dim),
-    which reproduces the fold's left-to-right IEEE addition order
-    (((0 + x1*y1) + x2*y2) + ...) for every pair simultaneously —
-    0.0 + x == x exactly, and Catalyst does not reassociate double
-    addition, so both paths are the same float sequence. Semantics
-    preserved from the join formulation (pinned by
-    tests/test_optimization_r12.py differential tests):
+    The cosines come from ``_cell_gram``, whose docstring states the
+    exactness, NULL/NaN and duplicate-id rules; the self-join it
+    replaced (OPTIMIZATION_r12 §B2) is the differential reference in
+    tests/test_optimization_r12.py.
 
-    - a vector whose array contains a NULL element (or a NULL/ragged
-      array — nothing any current caller can pass, every load site
-      filters size == EMB_DIM) had NULL dot with every partner:
-      excluded as a partner AND own mx NULL. The flag is computed
-      JVM-side (``exists(v, isNull)``) because Arrow erases the
-      null-vs-NaN distinction inside float lists;
-    - a genuine NaN coordinate propagates through the products and
-      wins the max (Spark orders NaN greatest — np.max agrees);
-    - a NULL cell never equi-joined: the kernel emits mx NULL for the
-      whole NULL-cell group instead of pairing it;
-    - rows shuffle to their cell ONCE (the join moved both sides).
-
-    Memory: the Gram block is computed in <= _PRUNE_CHUNK-column
-    slabs, so per-task memory is O(cell_rows x chunk), never
-    cell_rows^2 — cell size itself is bounded by K exactly as in the
-    IVF index this shares its partitioning with."""
+    Reducer: each vector's max cosine over the vectors of its cell
+    with a strictly smaller vec_id (a NaN cosine wins, as Spark orders
+    NaN greatest), taken over all copies of its vec_id and given to
+    every copy, as the join's GROUP BY vec_id did; NO_EARLIER when
+    there is no such pair."""
     import numpy as np
-    import pandas as pd
 
-    cell_t = cells.schema["cell"].dataType.simpleString()
-    vec_t = cells.schema["vec_id"].dataType.simpleString()
-    dim = EMB_DIM
-    chunk = _PRUNE_CHUNK
+    chunk = _GRAM_CHUNK
 
-    def _cell_mx(pdf: pd.DataFrame) -> pd.DataFrame:
-        # NaN maxima travel as an explicit flag column: the pandas ->
-        # Arrow serializer coerces NaN to NULL (pandas' null sentinel),
-        # which would silently turn "NaN dot wins the max" into "no
-        # earlier neighbor" — the post-kernel select reconstructs NaN.
-        n = len(pdf)
-        out_mx: list[float | None] = [None] * n
-        out_nan = np.zeros(n, dtype=bool)
-        # NULL cell: never equi-joined -> no pairs, mx stays NULL
-        if n > 1 and not pdf["cell"].isna().all():
-            pdf = pdf.sort_values(
-                "vec_id", na_position="last", kind="mergesort"
-            ).reset_index(drop=True)
-            vm = np.zeros((n, dim), dtype=np.float64)
-            valid = np.zeros(n, dtype=bool)
-            for r, (row, has_null, vid) in enumerate(
-                zip(pdf["v"], pdf["has_null_elem"], pdf["vec_id"])
-            ):
-                if row is None or has_null or has_null is None or pd.isna(vid):
-                    continue
-                a = np.asarray(row, dtype=np.float64)
-                if a.shape != (dim,):
-                    continue
-                vm[r] = a
-                valid[r] = True
-            vi = np.nonzero(valid)[0]
-            if len(vi) > 1:
-                vv = vm[vi]  # (m x dim), m valid rows in vec_id order
-                vids = pdf["vec_id"].values[vi]
-                m = len(vi)
-                for lo in range(1, m, chunk):
-                    hi = min(lo + chunk, m)
-                    b = vv[lo:hi]  # later vectors (columns)
-                    # dim-order accumulation == the fold's add order
-                    g = vv[:hi, 0:1] * b[:, 0][None, :]
-                    for d in range(1, dim):
-                        g += vv[:hi, d : d + 1] * b[:, d][None, :]
-                    # strict aid < vec_id mask, as the join's condition
-                    # (positional i<j would pair duplicate ids)
-                    mask = vids[:hi, None] < vids[lo:hi][None, :]
-                    isnan = np.isnan(g)
-                    has_nan = (mask & isnan).any(axis=0)
-                    col_mx = np.max(
-                        np.where(mask & ~isnan, g, -np.inf), axis=0
-                    )
-                    for k in range(hi - lo):
-                        r = int(vi[lo + k])
-                        if has_nan[k]:
-                            out_nan[r] = True
-                            out_mx[r] = 0.0  # placeholder, rebuilt as NaN
-                        else:
-                            out_mx[r] = float(col_mx[k])
-        else:
-            pdf = pdf.reset_index(drop=True)
-        return pd.DataFrame(
-            {
-                "vec_id": pdf["vec_id"].values,
-                "cell": pdf["cell"].values,
-                "mx": pd.Series(out_mx, dtype="float64"),
-                "mx_nan": out_nan,
-            }
-        )
+    def earlier_max(ids, joins, valid, gram):
+        vi = np.flatnonzero(valid)
+        vid = ids[vi]
+        mx = np.full(len(ids), -np.inf)
+        paired = np.zeros(len(ids), dtype=bool)
+        paired[vi] = vid > vid[:1]  # some valid vector has a smaller id
+        for lo in range(0, len(vi), chunk):
+            hi = min(lo + chunk, len(vi))
+            g = gram(vi[:hi], vi[lo:hi])
+            # strict id order, as the join's a.vec_id < b.vec_id
+            earlier = vid[:hi, None] < vid[None, lo:hi]
+            mx[vi[lo:hi]] = np.where(earlier, g, -np.inf).max(axis=0)
+        # one value per vec_id, for every copy (NULL ids never match)
+        starts = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
+        copies = np.diff(np.r_[starts, len(ids)])
+        return {
+            "vec_id": ids,
+            "cos": np.repeat(np.maximum.reduceat(mx, starts), copies),
+            "null": ~np.repeat(np.logical_or.reduceat(paired, starts), copies),
+        }
 
-    mx = (
-        cells.withColumn(
-            "has_null_elem", F.exists("v", lambda x: x.isNull())
-        )
-        .groupBy("cell")
-        .applyInPandas(
-            _cell_mx,
-            f"vec_id {vec_t}, cell {cell_t}, mx double, mx_nan boolean",
-        )
-    )
-    return (
-        mx.withColumn(
-            "mxf",
-            F.coalesce(
-                F.when(F.col("mx_nan"), F.lit(float("nan"))).otherwise(
-                    F.col("mx")
-                ),
-                F.lit(NO_EARLIER),
-            ),
-        )
-        .select(
-            "vec_id",
-            "cell",
-            F.round("mxf", 4).alias("max_earlier_cos"),
-            (F.col("mxf") > SEMDEDUP_TAU).cast("int").alias("pruned"),
-        )
+    mxf = F.coalesce(F.col("cos"), F.lit(NO_EARLIER))
+    return _cell_gram(cells, "cell", earlier_max).select(
+        "vec_id",
+        "cell",
+        F.round(mxf, 4).alias("max_earlier_cos"),
+        (mxf > SEMDEDUP_TAU).cast("int").alias("pruned"),
     )
 
 

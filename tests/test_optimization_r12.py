@@ -325,6 +325,23 @@ def test_prune_kernel_degenerate_rows(spark):
     assert byid[8][2] == repr(-2.0)
     assert "nan" in byid[5][2].lower()  # NaN survives the max
 
+    # Duplicate vec_ids: the join never pairs two copies of one id
+    # (a.vec_id < b.vec_id), and its max is grouped per id, so every
+    # copy gets the max over all copies.
+    dup_cases = [
+        ([(5, "c", vec(1.0)), (5, "c", vec(2.0))], {5: repr(-2.0)}),
+        (
+            [(4, "c", vec(-1.0)), (5, "c", vec(1.0)), (5, "c", vec(2.0))],
+            {4: repr(-2.0), 5: repr(-1.0)},
+        ),
+    ]
+    for rows, want in dup_cases:
+        cells = spark.createDataFrame(rows, "vec_id long, cell string, v array<double>")
+        new = _rows_key(semdedup_prune_report(cells).collect())
+        old = _rows_key(_prune_join_reference(cells).collect())
+        assert new == old
+        assert [(r[0], r[2]) for r in new] == [(r[0], want[r[0]]) for r in rows]
+
 
 # --- §C1: bm25/rrf single-tokenize base ------------------------------------
 

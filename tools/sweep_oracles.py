@@ -5,7 +5,8 @@ correctness scale) through tests.parity.compare and prints one line per
 failure. Exit 0 iff all green.
 
 Each green entry is STAMPED into tools/sweep_stamps/<sf>.json with
-catalog.entry_fingerprint (its docstring says what the hash covers);
+catalog.entry_fingerprint (its docstring says what the hash covers) as
+soon as it passes, so a run killed part-way keeps the greens before it;
 the committed stamps are what tests/test_window_swept.py checks, so an
 entry cannot
 rotate into the driver's 50-slot window without a current local green
@@ -42,11 +43,11 @@ def _stamp_path(sf_dir: str) -> str:
     return os.path.join(STAMP_DIR, os.path.basename(sf_dir.rstrip("/")) + ".json")
 
 
-def record_stamps(sf_dir: str, green: dict[str, str]) -> None:
-    """Merge fingerprints of freshly-green entries into the SF's stamp
-    file. The fingerprints are captured BEFORE the sweep runs, so a
-    source edit made while the sweep is in flight yields a stale stamp
-    (gate stays red) rather than a stamp for untested code."""
+def record_stamp(sf_dir: str, name: str, fingerprint: str) -> None:
+    """Merge the fingerprint of a freshly-green entry into the SF's
+    stamp file. The fingerprints are captured BEFORE the sweep runs, so
+    a source edit made while the sweep is in flight yields a stale
+    stamp (gate stays red) rather than a stamp for untested code."""
     import json
 
     os.makedirs(STAMP_DIR, exist_ok=True)
@@ -55,10 +56,11 @@ def record_stamps(sf_dir: str, green: dict[str, str]) -> None:
     if os.path.exists(path):
         with open(path) as f:
             stamps = json.load(f)
-    stamps.update(green)
-    with open(path, "w") as f:
+    stamps[name] = fingerprint
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
         json.dump(dict(sorted(stamps.items())), f, indent=1)
-    print(f"stamped {len(green)} entries -> {path}")
+    os.replace(tmp, path)
 
 
 def main() -> int:
@@ -76,7 +78,6 @@ def main() -> int:
         names = [n for n in names if any(f in n for f in filters)]
     fingerprints = {n: catalog.entry_fingerprint(n) for n in names}
     failures = []
-    greens: dict[str, str] = {}
     for i, name in enumerate(names):
         q = all_q[name]
         t0 = time.time()
@@ -88,11 +89,10 @@ def main() -> int:
         status = "ok" if ok else "FAIL"
         print(f"[{i+1}/{len(names)}] {status:4s} {dt:6.2f}s {name}" + ("" if ok else f" :: {msg[:300]}"), flush=True)
         if ok:
-            greens[name] = fingerprints[name]
+            record_stamp(sf, name, fingerprints[name])
         else:
             failures.append((name, msg))
-    if greens:
-        record_stamps(sf, greens)
+    print(f"stamps -> {_stamp_path(sf)}")
     print(f"\n{len(names) - len(failures)}/{len(names)} green")
     for name, msg in failures:
         print(f"FAIL {name}: {msg[:400]}")
